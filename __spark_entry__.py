@@ -1555,9 +1555,7 @@ def q_impute_rule_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etdtransform_spark.operators.impute import _impute_one_column
 
     base = _etd_household_series(_t(spark, sf_dir, "events"))
-    out = _impute_one_column(
-        base, "V", "ProjectIdBSV", {"VDiff": {"Min": 0.0, "Max": 300.0}}
-    )
+    out = _impute_one_column(base, "V", {"VDiff": {"Min": 0.0, "Max": 300.0}})
     return out.select(
         "event_id",
         F.col("HuisIdBSV").alias("user_id"),
@@ -13491,9 +13489,7 @@ def q_etd_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etdtransform_spark.operators.resample import resample
 
     base = _etd_household_series(_t(spark, sf_dir, "events"), project_mod=4)
-    imp = _impute_one_column(
-        base, "V", "ProjectIdBSV", {"VDiff": {"Min": 0.0, "Max": 300.0}}
-    )
+    imp = _impute_one_column(base, "V", {"VDiff": {"Min": 0.0, "Max": 300.0}})
     # STAGE BOUNDARY: the imputed frame feeds TWO consumers (telemetry
     # rollup + the calculated/resample/aggregate chain) — without a
     # materialization each would re-run the full gap-stats window stack

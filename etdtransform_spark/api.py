@@ -14,13 +14,15 @@ reference relies on.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import INTERVALS
+from .config import INTERVALS, dataset_families
 from .operators.periods import add_rolling_avg, mark_coldest_weeks, weekly_stats
 from .sources.knmi import join_weather_data
-from .sources.parquet import join_index, read_family
+from .sources.parquet import family_path, join_index, read_family
 
 HOUSEHOLD_TABLES = ["default", "calculated"]
 
@@ -141,24 +143,8 @@ def register_sql_views(
 
     Returns the list of registered view names.
     """
-    from .sources.parquet import family_path
-    import os
-
-    names: list[tuple[str, str | None]] = [
-        ("household_default", None),
-        ("household_calculated", None),
-        ("household_imputed", None),
-        ("household_aggregated_diff", None),
-        ("avg_diffs", None),
-        ("household_diff_max_bounds", None),
-        ("impute_gap_stats", None),
-        ("impute_summary_household", None),
-        ("impute_summary_project", None),
-    ]
-    for iv in intervals or INTERVALS:
-        names += [("household", iv), ("project", iv)]
     registered: list[str] = []
-    for name, iv in names:
+    for name, iv in dataset_families(intervals):
         path = family_path(folder, name, iv)
         if not os.path.exists(path):
             continue
@@ -188,25 +174,8 @@ def catalog(spark: SparkSession, folder: str) -> DataFrame:
     Returns (family, interval, path, n_files, size_bytes, n_columns,
     committed).
     """
-    import os
-
-    from .sources.parquet import family_path, read_family
-
-    base_names: list[tuple[str, str | None]] = [
-        ("household_default", None),
-        ("household_calculated", None),
-        ("household_imputed", None),
-        ("household_aggregated_diff", None),
-        ("avg_diffs", None),
-        ("household_diff_max_bounds", None),
-        ("impute_gap_stats", None),
-        ("impute_summary_household", None),
-        ("impute_summary_project", None),
-    ]
-    for iv in INTERVALS:
-        base_names += [("household", iv), ("project", iv)]
     rows = []
-    for name, iv in base_names:
+    for name, iv in dataset_families():
         path = family_path(folder, name, iv)
         if not os.path.exists(path):
             continue

@@ -182,20 +182,28 @@ THRESHOLDS: dict[str, dict[str, float]] = {
     }.items()
 }
 
-# Dataset family names (the de-facto catalog; reference tests/conftest.py:29-49).
-DATASET_FAMILIES: list[str] = [
+# Dataset families ``run_pipeline`` writes (the de-facto catalog; reference
+# tests/conftest.py:29-49): stage families without an interval, then the
+# per-interval ``household``/``project`` pair.
+STAGE_FAMILIES: list[str] = [
     "household_default",
-    "avg_diffs",
-    "household_diff_max_bounds",
+    "household_calculated",
     "household_imputed",
     "household_aggregated_diff",
+    "avg_diffs",
+    "household_diff_max_bounds",
     "impute_gap_stats",
     "impute_summary_household",
     "impute_summary_project",
-    "household_calculated",
-    *[f"household_{iv}" for iv in INTERVALS],
-    *[f"project_{iv}" for iv in INTERVALS],
 ]
+
+
+def dataset_families(intervals: list[str] | None = None) -> list[tuple[str, str | None]]:
+    """``(base name, interval)`` of every family, in catalog order."""
+    return [(name, None) for name in STAGE_FAMILIES] + [
+        (name, iv) for iv in intervals or INTERVALS for name in ("household", "project")
+    ]
+
 
 KEY_COLUMNS: list[str] = ["HuisIdBSV", "ProjectIdBSV"]
 READING_DATE: str = "ReadingDate"

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import qround
 
 from ..config import (
+    CUMULATIVE_COLUMNS,
     IMPUTE_CUMULATIVE_COLUMNS,
     THRESHOLDS,
     avg_col,
@@ -61,11 +62,7 @@ class ImputeType(IntFlag):
 # Stage 1: average-diff preparation (reference impute.py:12-131)
 # ---------------------------------------------------------------------------
 
-def household_diff_max_bounds(
-    df: DataFrame,
-    diff_columns: list[str],
-    project_id_column: str = "ProjectIdBSV",
-) -> DataFrame:
+def household_diff_max_bounds(df: DataFrame, diff_columns: list[str]) -> DataFrame:
     """Per-house max of each Diff column plus the per-project outlier upper
     bound (2 x exact p95 of house maxima over values > 1e-8; NULL if none).
 
@@ -74,10 +71,9 @@ def household_diff_max_bounds(
     """
     # NOTE: config.huis_max_col/upper_bound_col take the CUMULATIVE name and
     # append "Diff"; inputs here are already diff columns, so the suffixes
-    # are spelled directly. Same gated-percentile shape as
-    # aggregate.filtered_percentile_bounds (both implement reference
-    # impute.py:55-90); kept inline for the <c>_huis_max naming contract.
-    house_max = df.groupBy(project_id_column, "HuisIdBSV").agg(
+    # are spelled directly. Exact ``percentile`` (not percentile_approx):
+    # the per-project input (house maxima) is tiny.
+    house_max = df.groupBy("ProjectIdBSV", "HuisIdBSV").agg(
         *[F.max(c).alias(f"{c}_huis_max") for c in diff_columns]
     )
     bound_exprs = []
@@ -88,14 +84,13 @@ def household_diff_max_bounds(
             (F.percentile(gated, F.lit(0.95)) * 2.0).alias(f"{c}_upper_bound")
         )
     # bounds is one row per PROJECT (dimension-sized at any SF) -> broadcast
-    bounds = house_max.groupBy(project_id_column).agg(*bound_exprs)
-    return house_max.join(F.broadcast(bounds), project_id_column, "left")
+    bounds = house_max.groupBy("ProjectIdBSV").agg(*bound_exprs)
+    return house_max.join(F.broadcast(bounds), "ProjectIdBSV", "left")
 
 
 def calculate_average_diff(
     df: DataFrame,
     diff_columns: list[str],
-    project_id_column: str = "ProjectIdBSV",
     max_bounds: DataFrame | None = None,
 ) -> DataFrame:
     """Per (project, ReadingDate) mean of each Diff column over *included*
@@ -107,7 +102,7 @@ def calculate_average_diff(
     replacing the reference's per-column filter + groupby loop.
     """
     if max_bounds is None:
-        max_bounds = household_diff_max_bounds(df, diff_columns, project_id_column)
+        max_bounds = household_diff_max_bounds(df, diff_columns)
     # NO broadcast hint: max_bounds is one row per HOUSEHOLD (wide, 2 cols
     # per diff column) — per-house tables scale with the data, not the
     # dims, and a forced broadcast bypasses autoBroadcastJoinThreshold at
@@ -115,19 +110,19 @@ def calculate_average_diff(
     # hash partitioning; AQE broadcasts on its own when the table is small.
     joined = df.join(
         max_bounds.select(
-            project_id_column,
+            "ProjectIdBSV",
             "HuisIdBSV",
             *[f"{c}_huis_max" for c in diff_columns],
             *[f"{c}_upper_bound" for c in diff_columns],
         ),
-        [project_id_column, "HuisIdBSV"],
+        ["ProjectIdBSV", "HuisIdBSV"],
         "left",
     )
     agg_exprs = []
     for c in diff_columns:
         include = F.col(f"{c}_huis_max") < F.col(f"{c}_upper_bound")
         agg_exprs.append(F.avg(F.when(include, F.col(c))).alias(f"{c}_avg"))
-    return joined.groupBy(project_id_column, "ReadingDate").agg(*agg_exprs)
+    return joined.groupBy("ProjectIdBSV", "ReadingDate").agg(*agg_exprs)
 
 
 # ---------------------------------------------------------------------------
@@ -137,17 +132,14 @@ def calculate_average_diff(
 def _impute_one_column(
     df: DataFrame,
     cum_col: str,
-    project_id_column: str,
     thresholds: dict[str, dict[str, float]],
 ) -> DataFrame:
     """Impute one cumulative column's Diff in-plan. Adds ``<Var>OldDiff``,
-    ``<Var>Diff_is_imputed``, ``<Var>Diff_impute_type`` and the per-column
-    bookkeeping columns ``_cvg_<Var>`` / ``_gap_length_<Var>`` used by the
-    gap-stats aggregation (dropped by the orchestrator afterwards)."""
+    ``<Var>Diff_is_imputed`` and ``<Var>Diff_impute_type``; every other
+    column it builds is a temporary dropped before it returns."""
     d, a = diff_col(cum_col), avg_col(cum_col)
     it_col, ii_col = impute_type_col(cum_col), is_imputed_col(cum_col)
-    cvg = f"_cvg_{cum_col}"
-    gap_len = f"_gap_length_{cum_col}"
+    cvg, gap_len = "_cvg", "_gap_len"
 
     house_w = Window.partitionBy("HuisIdBSV").orderBy("ReadingDate")
     house_all = Window.partitionBy("HuisIdBSV")
@@ -311,61 +303,54 @@ def _impute_one_column(
 
     df = df.withColumn(d, F.col("_new_diff"))
     return df.drop(
-        "_gap_start", "_cve_prev", "_prev_seed", "_prev_cum", "_end_cum",
-        "_gap_jump", "_impute_values", "_impute_jump", "_house_factor", "_new_diff",
+        "_gap_start", "_cve_prev", cvg, gap_len, "_prev_seed", "_prev_cum",
+        "_end_cum", "_gap_jump", "_impute_values", "_impute_jump",
+        "_house_factor", "_new_diff",
     )
 
 
 def impute_and_normalize(
     df: DataFrame,
     cumulative_columns: list[str] | None = None,
-    project_id_column: str = "ProjectIdBSV",
     thresholds: dict[str, dict[str, float]] | None = None,
     avg_diffs: DataFrame | None = None,
-    normalize_columns: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Full imputation: join project averages, impute every cumulative
-    column's Diff, rebuild the cumulative columns from imputed diffs, and
-    compute per-(project, house, column) gap statistics.
+    column's Diff, and rebuild the cumulative columns from imputed diffs.
 
-    ``normalize_columns`` is the set of cumulative columns rebuilt in the
-    normalization stage; it defaults to ``cumulative_columns`` plus every
-    OTHER registry cumulative column present with its Diff — the reference's
-    normalization loop iterates the full etdmap list, not the imputed one
+    Normalization rebuilds ``cumulative_columns`` plus every OTHER registry
+    cumulative column present with its Diff — the reference's normalization
+    loop iterates the full etdmap list, not the imputed one
     (aggregate.py:163,200-211), so non-imputed extras like Gasgebruik are
     also rebuilt from their raw diffs (verified value-for-value by
     tests/test_reference_parity.py).
 
-    Returns ``(imputed_df, gap_stats_df)``. The whole per-column pipeline is
-    one lazy plan with a single exchange (see module docstring).
-    Reference orchestration: vectorized_impute.py:112-273 + aggregate.py:199-211.
+    Returns the imputed frame: one lazy plan with a single exchange (see
+    module docstring). Its gap statistics are ``imputation_gap_stats`` over
+    this frame. Reference orchestration: vectorized_impute.py:112-273 +
+    aggregate.py:199-211.
     """
     if cumulative_columns is None:
         cumulative_columns = [c for c in IMPUTE_CUMULATIVE_COLUMNS if c in df.columns]
     if thresholds is None:
         thresholds = THRESHOLDS
-    if normalize_columns is None:
-        from ..config import CUMULATIVE_COLUMNS
-
-        normalize_columns = list(cumulative_columns) + [
-            c
-            for c in CUMULATIVE_COLUMNS
-            if c not in cumulative_columns
-            and c in df.columns
-            and diff_col(c) in df.columns
-        ]
+    normalize_columns = list(cumulative_columns) + [
+        c
+        for c in CUMULATIVE_COLUMNS
+        if c not in cumulative_columns
+        and c in df.columns
+        and diff_col(c) in df.columns
+    ]
     diff_columns = get_diff_columns(cumulative_columns)
 
     if avg_diffs is None:
-        avg_diffs = calculate_average_diff(df, diff_columns, project_id_column)
+        avg_diffs = calculate_average_diff(df, diff_columns)
     # avg_diffs is |projects| x |timestamps| — ~1/n_households of the fact
     # table. Broadcast at test scale; at 100 TB AQE picks sort-merge.
-    df = df.join(avg_diffs, [project_id_column, "ReadingDate"], "left")
+    df = df.join(avg_diffs, ["ProjectIdBSV", "ReadingDate"], "left")
 
     for cum_col in cumulative_columns:
-        df = _impute_one_column(df, cum_col, project_id_column, thresholds)
-
-    gap_stats = imputation_gap_stats(df, cumulative_columns, project_id_column)
+        df = _impute_one_column(df, cum_col, thresholds)
 
     # normalization (reference aggregate.py:199-211): Original := cumulative;
     # cumulative := cumsum(imputed Diff); Check := diff(new - original).
@@ -386,12 +371,7 @@ def impute_and_normalize(
         - F.lag(F.col(c) - F.col(original_col(c))).over(house_w)
         for c in normalize_columns
     }
-    df = df.withColumns(check_cols)
-
-    bookkeeping = [f"_cvg_{c}" for c in cumulative_columns] + [
-        f"_gap_length_{c}" for c in cumulative_columns
-    ]
-    return df.drop(*bookkeeping), gap_stats
+    return df.withColumns(check_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -399,33 +379,38 @@ def impute_and_normalize(
 # ---------------------------------------------------------------------------
 
 def imputation_gap_stats(
-    df: DataFrame,
+    imputed: DataFrame,
     cumulative_columns: list[str],
-    project_id_column: str = "ProjectIdBSV",
 ) -> DataFrame:
-    """Per (project, house, diff column): totals, deviation from the
-    cumulative min-max difference, gap/imputed counts, and the distinct
-    method list + bitmask. One wide aggregate, then an explode to long form
-    (one shuffle; the reference does a groupby().apply per column)."""
+    """Per (project, house, diff column) gap summary of an
+    ``impute_and_normalize`` output, read from its columns alone (reference
+    vectorized_impute.py:168-188 also summarizes the imputed frame): Diff
+    total, its deviation from the span of ``<Var>Original`` (the cumulative
+    column before normalization), gap/imputed counts, and the distinct
+    method list + bitmask. A gap row is one whose ``<Var>OldDiff`` is NULL.
+    One wide aggregate, then an explode to long form (one shuffle; the
+    reference does a groupby().apply per column)."""
     per_col_structs = []
     for cum_col in cumulative_columns:
         d, it = diff_col(cum_col), impute_type_col(cum_col)
-        cvg, gl = f"_cvg_{cum_col}", f"_gap_length_{cum_col}"
+        orig = F.col(original_col(cum_col))
+        in_gap = F.col(old_diff_col(cum_col)).isNull()
         # pandas .sum() over an all-NA group is 0.0, not NA
         # (vectorized_impute.py:168 diff_column_total) — parity-pinned by
         # tests/test_reference_parity.py on an all-NA household column
         diff_total = F.coalesce(F.sum(F.col(d)), F.lit(0.0))
-        minmax = F.max(F.col(cum_col)) - F.min(F.col(cum_col))
+        minmax = F.max(orig) - F.min(orig)
         methods = F.array_sort(
             F.array_distinct(F.collect_list(F.col(it)))
         )
+        missing = F.count(F.when(in_gap, F.lit(1)))
         per_col_structs.append(
             F.struct(
                 F.lit(d).alias("column"),
                 diff_total.alias("diff_col_total"),
                 minmax.alias("cum_col_min_max_diff"),
                 (diff_total - minmax).alias("deviation"),
-                F.count(F.col(gl)).alias("missing"),
+                missing.alias("missing"),
                 methods.alias("methods"),
                 # reference semantics (vectorized_impute.py:176): every row
                 # with an impute_type counts as imputed — threshold clamps
@@ -436,27 +421,21 @@ def imputation_gap_stats(
                 # (impute.py:177-178) and goes NEGATIVE when clamps fire
                 # outside gaps — a documented §2.10 defect disposition; the
                 # exact reconciliation is asserted by test_reference_parity
-                (
-                    F.count(F.col(cvg))
-                    - F.count(F.when(F.col(cvg).isNotNull(), F.col(it)))
-                ).alias("imputed_na"),
+                (missing - F.count(F.when(in_gap, F.col(it)))).alias("imputed_na"),
                 F.coalesce(
                     F.bit_or(F.col(it)), F.lit(0)
                 ).alias("bitwise_methods"),
             )
         )
-    wide = df.groupBy(project_id_column, "HuisIdBSV").agg(
+    wide = imputed.groupBy("ProjectIdBSV", "HuisIdBSV").agg(
         F.array(*per_col_structs).alias("_stats")
     )
-    return wide.select(
-        project_id_column, "HuisIdBSV", F.inline("_stats")
-    )
+    return wide.select("ProjectIdBSV", "HuisIdBSV", F.inline("_stats"))
 
 
 def imputation_summaries(
     gap_stats: DataFrame,
     df: DataFrame,
-    project_id_column: str = "ProjectIdBSV",
 ) -> tuple[DataFrame, DataFrame]:
     """House and project rollups with ``percentage_imputed``
     (reference impute.py:671-759)."""
@@ -470,11 +449,11 @@ def imputation_summaries(
         .join(total_house, "HuisIdBSV")
         .withColumn("percentage_imputed", F.col("imputed") / F.col("total_records") * 100)
     )
-    total_project = df.groupBy(project_id_column).agg(
+    total_project = df.groupBy("ProjectIdBSV").agg(
         F.count(F.lit(1)).alias("total_records")
     )
     summary_project = (
-        gap_stats.groupBy(project_id_column, "column")
+        gap_stats.groupBy("ProjectIdBSV", "column")
         .agg(
             F.bit_or("bitwise_methods").alias("bitwise_methods"),
             F.array_sort(
@@ -484,7 +463,7 @@ def imputation_summaries(
             F.sum("imputed").alias("imputed"),
             F.sum("imputed_na").alias("imputed_na"),
         )
-        .join(F.broadcast(total_project), project_id_column)
+        .join(F.broadcast(total_project), "ProjectIdBSV")
         .withColumn("percentage_imputed", F.col("imputed") / F.col("total_records") * 100)
     )
     return summary_house, summary_project

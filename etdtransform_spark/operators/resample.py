@@ -74,16 +74,3 @@ def resample(
         *group_cols, reading_date, *variables.keys()
     )
 
-
-def resample_all_intervals(
-    df: DataFrame,
-    intervals: list[str],
-    group_cols: list[str] | None = None,
-    variables: dict[str, str] | None = None,
-) -> dict[str, DataFrame]:
-    """Resample once per interval. Callers writing all intervals should
-    ``df.persist()`` first so the source scan is shared."""
-    return {
-        iv: resample(df, iv, group_cols=group_cols, variables=variables)
-        for iv in intervals
-    }

@@ -17,8 +17,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import (
+    CUMULATIVE_COLUMNS,
     IMPUTE_CUMULATIVE_COLUMNS,
     INTERVALS,
     get_diff_columns,
@@ -29,6 +31,7 @@ from ..operators.impute import (
     calculate_average_diff,
     household_diff_max_bounds,
     impute_and_normalize,
+    imputation_gap_stats,
     imputation_summaries,
 )
 from ..operators.resample import resample
@@ -46,17 +49,26 @@ def run_pipeline(
     """Run the full chain from a combined household DataFrame; returns the
     map of family name -> written path.
 
+    Every family is written, then read back for the stages after it, so
+    each stage reads its inputs from disk: gap stats and the imputation
+    summaries read the written ``household_imputed`` family, and the impute
+    plan runs once.
+
     ``skip_existing`` is the distributed twin of the reference's
     ``sorted=``/``diffs_calculated=`` skip flags (impute.py:587-637) made
     structural: a family whose sink already holds a committed write (Spark's
     ``_SUCCESS`` marker) is read back instead of recomputed, so an
     interrupted run resumes from its last completed stage. A half-written
-    sink has no marker and is safely overwritten."""
+    sink has no marker and is safely overwritten. Each family is checked on
+    its own: a lost marker recomputes that family from its (read-back)
+    inputs and nothing upstream of it."""
     os.makedirs(output_folder, exist_ok=True)
+    written: dict[str, str] = {}
 
-    def materialize(key, base_name, build, interval=None, partition_by=None):
+    def materialize(base_name, build, interval=None, partition_by=None):
         """Write-or-skip one family; ``build`` is lazy so a skipped stage
         never constructs its plan."""
+        key = base_name if interval is None else f"{base_name}_{interval}"
         path = family_path(output_folder, base_name, interval)
         if skip_existing and os.path.exists(os.path.join(path, "_SUCCESS")):
             written[key] = path
@@ -66,6 +78,7 @@ def run_pipeline(
                 interval=interval, partition_by=partition_by,
             )
         return read_family(spark, output_folder, base_name, interval=interval)
+
     cum_cols = cumulative_columns or [
         c for c in IMPUTE_CUMULATIVE_COLUMNS if c in household_df.columns
     ]
@@ -73,67 +86,47 @@ def run_pipeline(
     # the project-mean-of-diffs stage averages EVERY registry diff column
     # present, not just the imputed ones (reference aggregate.py:163 uses the
     # full etdmap cumulative list)
-    from ..config import CUMULATIVE_COLUMNS
-
     all_diff_cols = diff_cols + [
         get_diff_columns([c])[0]
         for c in CUMULATIVE_COLUMNS
         if c not in cum_cols and get_diff_columns([c])[0] in household_df.columns
     ]
-    ivs = intervals or INTERVALS
-    written: dict[str, str] = {}
 
     household_df = materialize(
-        "household_default", "household_default", lambda: household_df,
-        partition_by=["ProjectIdBSV"],
+        "household_default", lambda: household_df, partition_by=["ProjectIdBSV"],
     )
 
     # stage: avg-diff preparation (impute.py:469-537)
     bounds = materialize(
-        "household_diff_max_bounds", "household_diff_max_bounds",
+        "household_diff_max_bounds",
         lambda: household_diff_max_bounds(household_df, diff_cols),
     )
     avg_diffs = materialize(
-        "avg_diffs", "avg_diffs",
+        "avg_diffs",
         lambda: calculate_average_diff(household_df, diff_cols, max_bounds=bounds),
     )
 
     # stage: imputation + normalization (impute.py:564-768)
-    impute_path = family_path(output_folder, "household_imputed")
-    gap_path = family_path(output_folder, "impute_gap_stats")
-    if skip_existing and all(
-        os.path.exists(os.path.join(p, "_SUCCESS"))
-        for p in (impute_path, gap_path)
-    ):
-        written["household_imputed"] = impute_path
-        written["impute_gap_stats"] = gap_path
-    else:
-        imputed_new, gap_stats_new = impute_and_normalize(
-            household_df, cum_cols, avg_diffs=avg_diffs
-        )
-        written["household_imputed"] = write_family(
-            imputed_new, output_folder, "household_imputed",
-            partition_by=["ProjectIdBSV"],
-        )
-        written["impute_gap_stats"] = write_family(
-            gap_stats_new, output_folder, "impute_gap_stats"
-        )
-    imputed = read_family(spark, output_folder, "household_imputed")
-    gap_stats = read_family(spark, output_folder, "impute_gap_stats")
+    imputed = materialize(
+        "household_imputed",
+        lambda: impute_and_normalize(household_df, cum_cols, avg_diffs=avg_diffs),
+        partition_by=["ProjectIdBSV"],
+    )
+    gap_stats = materialize(
+        "impute_gap_stats", lambda: imputation_gap_stats(imputed, cum_cols)
+    )
     materialize(
-        "impute_summary_household", "impute_summary_household",
+        "impute_summary_household",
         lambda: imputation_summaries(gap_stats, imputed)[0],
     )
     materialize(
-        "impute_summary_project", "impute_summary_project",
+        "impute_summary_project",
         lambda: imputation_summaries(gap_stats, imputed)[1],
     )
 
     # stage: project-mean of diffs (aggregate.py:190-194)
-    from pyspark.sql import functions as F
-
     materialize(
-        "household_aggregated_diff", "household_aggregated_diff",
+        "household_aggregated_diff",
         lambda: imputed.groupBy("ProjectIdBSV", "ReadingDate").agg(
             *[F.avg(c).alias(c) for c in all_diff_cols]
         ),
@@ -141,19 +134,18 @@ def run_pipeline(
 
     # stage: calculated columns (calculated_columns.py:9-139)
     calculated = materialize(
-        "household_calculated", "household_calculated",
+        "household_calculated",
         lambda: add_calculated_columns(imputed),
         partition_by=["ProjectIdBSV"],
     )
 
     # stage: resample matrix + project aggregation (aggregate.py:356-539)
-    for iv in ivs:
+    for iv in intervals or INTERVALS:
         hh_iv = materialize(
-            f"household_{iv}", "household",
-            lambda iv=iv: resample(calculated, iv), interval=iv,
+            "household", lambda iv=iv: resample(calculated, iv), interval=iv,
         )
         materialize(
-            f"project_{iv}", "project",
+            "project",
             lambda hh_iv=hh_iv: aggregate_project_data(hh_iv), interval=iv,
         )
     return written

@@ -24,7 +24,9 @@ import os
 import re
 import sys
 
-ENTRY = "/root/repo/__spark_entry__.py"
+ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"
+)
 WINDOW = 50
 
 
@@ -35,8 +37,8 @@ def main(
     prioritize: list[str] | None = None,
 ) -> None:
     # Telemetry follows the entry file's directory unless overridden, so a
-    # test invocation with a tmp entry_path never stomps the real
-    # /root/repo/TELEMETRY.md (VERDICT r12 "what's wrong" #1).
+    # test invocation with a tmp entry_path never stomps the repo's own
+    # TELEMETRY.md (VERDICT r12 "what's wrong" #1).
     if telemetry_path is None:
         telemetry_path = os.path.join(
             os.path.dirname(os.path.abspath(entry_path)), "TELEMETRY.md"

@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMALL = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 BIG = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1"

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import sys
 
 import duckdb
@@ -148,7 +149,7 @@ def compare_query(spark, con, name, fn, sql, sf_dir):
 
 
 def run_all(sf_dir: str, only: list[str] | None = None, plain: bool = False):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     if plain:

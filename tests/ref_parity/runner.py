@@ -117,7 +117,7 @@ def run_spark_pipeline(spark, mapped_dir: str, out_dir: str) -> dict[str, str]:
 if __name__ == "__main__":
     import tempfile
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(_HERE)))
     from tests.ref_parity.fixture import write_mapped_folder
 
     base = sys.argv[1] if len(sys.argv) > 1 else tempfile.mkdtemp(prefix="refpar_")

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from etdtransform_spark.operators.aggregate import (
     aggregate_project_data,
-    filtered_percentile_bounds,
     min_count_aggregate,
 )
+from etdtransform_spark.operators.impute import household_diff_max_bounds
 from etdtransform_spark.operators.resample import resample
 
 T0 = dt.datetime(2023, 1, 1, 0, 0, 0)
@@ -61,14 +61,21 @@ def test_aggregate_project_data_uses_registry(spark):
     assert out[_ts(0)]["n"] == 2
 
 
-def test_filtered_percentile_bounds_null_when_no_values_pass(spark):
-    rows = [(1, 0.0), (1, 1e-9), (2, 4.0), (2, 8.0)]
-    df = spark.createDataFrame(rows, "p long, v double")
-    out = {r["p"]: r for r in
-           filtered_percentile_bounds(df, ["p"], ["v"]).collect()}
-    assert out[1]["v_p95"] is None and out[1]["v_upper_bound"] is None
-    assert out[2]["v_p95"] == pytest.approx(7.8)  # exact interpolated p95
-    assert out[2]["v_upper_bound"] == pytest.approx(15.6)
+def test_household_diff_max_bounds_null_when_no_values_pass(spark):
+    """Per-project outlier bound = 2 x exact p95 of the house maxima above
+    1e-8 (reference impute.py:55-90); NULL when no house max passes."""
+    rows = [(1, 1, 0.0), (1, 2, 1e-9), (2, 3, 1.0), (2, 3, 4.0), (2, 4, 8.0)]
+    df = spark.createDataFrame(
+        rows, "ProjectIdBSV long, HuisIdBSV long, XDiff double"
+    )
+    out = {r["HuisIdBSV"]: r for r in
+           household_diff_max_bounds(df, ["XDiff"]).collect()}
+    assert out[1]["XDiff_upper_bound"] is None
+    assert out[2]["XDiff_upper_bound"] is None
+    assert out[3]["XDiff_huis_max"] == 4.0 and out[4]["XDiff_huis_max"] == 8.0
+    # exact interpolated p95 of {4.0, 8.0} is 7.8
+    assert out[3]["XDiff_upper_bound"] == pytest.approx(15.6)
+    assert out[4]["XDiff_upper_bound"] == pytest.approx(15.6)
 
 
 def test_resample_min_count_gate(spark):

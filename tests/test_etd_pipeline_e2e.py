@@ -5,12 +5,8 @@ semantics, and the impute-mask coverage the synthesis promises."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 def _run(spark, sf_dir):

@@ -12,7 +12,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etdtransform_spark.operators.impute import ImputeType, impute_and_normalize
+from etdtransform_spark.operators.impute import (
+    ImputeType,
+    impute_and_normalize,
+    imputation_gap_stats,
+)
 
 T0 = dt.datetime(2023, 1, 1, 0, 0, 0)
 TS = [T0 + dt.timedelta(minutes=5 * i) for i in range(6)]
@@ -57,6 +61,18 @@ SCENARIOS = {
         0.5, ImputeType.NO_END_VALUE),
 }
 
+# house_id: (diff_col_total, cum_col_min_max_diff, deviation): the imputed
+# Diff total, the span of the original cumulative series, and their difference
+GAP_TOTALS = {
+    1: (6.0, 5.0, 1.0),
+    2: (6.0, 5.0, 1.0),
+    3: (3.0, 4.0, -1.0),
+    4: (0.0, 0.0, 0.0),
+    5: (3.0, 3.0, 0.0),
+    6: (4.5, 3.0, 1.5),
+    7: (4.5, 2.0, 2.5),
+}
+
 GAP_ROWS = {
     1: [2, 3, 4], 2: [2, 3, 4], 3: [2, 3, 4], 4: [2, 3, 4],
     5: [0, 1, 2], 6: [0, 1, 2], 7: [3, 4, 5],
@@ -77,13 +93,13 @@ def imputed(spark):
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
     df = df.drop("_avg")
-    out, gap_stats = impute_and_normalize(
+    out = impute_and_normalize(
         df, cumulative_columns=["X"], thresholds={}, avg_diffs=avg_diffs
     )
     data = {
         (r["HuisIdBSV"], r["ReadingDate"]): r for r in out.collect()
     }
-    return data, gap_stats.collect()
+    return data, imputation_gap_stats(out, ["X"]).collect()
 
 
 @pytest.mark.parametrize("hid", list(SCENARIOS))
@@ -131,6 +147,10 @@ def test_gap_stats(imputed):
         assert r["imputed_na"] == 0
         assert r["bitwise_methods"] == int(expected_type)
         assert list(r["methods"]) == [int(expected_type)]
+        total, min_max, deviation = GAP_TOTALS[hid]
+        assert r["diff_col_total"] == pytest.approx(total), hid
+        assert r["cum_col_min_max_diff"] == pytest.approx(min_max), hid
+        assert r["deviation"] == pytest.approx(deviation), hid
 
 
 def test_threshold_clamp(spark):
@@ -145,7 +165,7 @@ def test_threshold_clamp(spark):
     avg_diffs = df.select(
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
-    out, _ = impute_and_normalize(
+    out = impute_and_normalize(
         df.drop("_avg"),
         cumulative_columns=["X"],
         thresholds={"XDiff": {"Min": 0.0, "Max": 2.0}},
@@ -174,7 +194,7 @@ def test_mid_gap_cumulative_value_splits_group(spark):
     avg_diffs = df.select(
         "ProjectIdBSV", "ReadingDate", F.col("_avg").alias("XDiff_avg")
     ).distinct()
-    out, stats = impute_and_normalize(
+    out = impute_and_normalize(
         df.drop("_avg"), cumulative_columns=["X"], thresholds={},
         avg_diffs=avg_diffs,
     )
@@ -229,8 +249,6 @@ def test_gap_stats_threshold_outside_gap_semantics(spark):
     defect; the exact reconciliation is pinned by test_reference_parity)."""
     import datetime as dt
 
-    from etdtransform_spark.operators.impute import impute_and_normalize
-
     t0 = dt.datetime(2023, 1, 1)
     ts = [t0 + dt.timedelta(minutes=5 * i) for i in range(6)]
     # 3-row gap (rows 2-4) + one non-gap diff of 6.0 (> threshold Max 2.0)
@@ -245,10 +263,11 @@ def test_gap_stats_threshold_outside_gap_semantics(spark):
         "`Zon-opwekTotaal` double, `Zon-opwekTotaalDiff` double, "
         "`Zon-opwekTotaalDiff_avg` double",
     )
-    _imputed, gap_stats = impute_and_normalize(
+    imputed = impute_and_normalize(
         df.drop("Zon-opwekTotaalDiff_avg"),
         cumulative_columns=["Zon-opwekTotaal"],
     )
+    gap_stats = imputation_gap_stats(imputed, ["Zon-opwekTotaal"])
     s = gap_stats.collect()[0]
     assert s.missing == 3
     assert s.imputed == 4          # 3 gap rows + the clamped non-gap row

@@ -11,7 +11,10 @@ import random
 
 from pyspark.sql import functions as F
 
-from etdtransform_spark.operators.impute import impute_and_normalize
+from etdtransform_spark.operators.impute import (
+    impute_and_normalize,
+    imputation_gap_stats,
+)
 
 CUM = "Zon-opwekTotaal"
 DIFF = f"{CUM}Diff"
@@ -59,7 +62,8 @@ def test_impute_invariants_random_gaps(spark):
             f"`{CUM}` double, `{DIFF}` double",
         )
         impute_kwargs = dict(cumulative_columns=[CUM])
-        imputed, gap_stats = impute_and_normalize(df, **impute_kwargs)
+        imputed = impute_and_normalize(df, **impute_kwargs)
+        gap_stats = imputation_gap_stats(imputed, [CUM])
         out = imputed.select(
             "HuisIdBSV",
             "ReadingDate",

@@ -5,10 +5,6 @@ dedup-group canonicals, and the packing budget."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def _run(spark, sf_dir):
     import __spark_entry__ as e

@@ -33,8 +33,6 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

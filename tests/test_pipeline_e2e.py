@@ -226,6 +226,36 @@ def test_pipeline_skip_existing_resumes_without_rewrite(spark, pipeline_out):
     rows_after = {k: spark.read.parquet(p).count() for k, p in written3.items()}
     assert rows_after == rows_before
 
+    # a lost gap-stats marker recomputes gap stats alone (from the written
+    # household_imputed family), with the same rows
+    marks = {
+        k: os.path.getmtime(os.path.join(p, "_SUCCESS"))
+        for k, p in written3.items()
+    }
+
+    def gap_rows():
+        rows = sorted(spark.read.parquet(written["impute_gap_stats"]).collect())
+        floats = ("diff_col_total", "cum_col_min_max_diff", "deviation")
+        exact = [{k: v for k, v in r.asDict().items() if k not in floats}
+                 for r in rows]
+        return exact, [[r[f] for f in floats] for r in rows]
+
+    exact_before, floats_before = gap_rows()
+    time.sleep(1.1)
+    os.remove(os.path.join(written["impute_gap_stats"], "_SUCCESS"))
+    written4 = run_pipeline(
+        spark, dummy, out_dir, cumulative_columns=CUM_COLS,
+        intervals=["15min", "60min", "24h"], skip_existing=True,
+    )
+    assert written4 == written
+    for k, p in written4.items():
+        rewritten = os.path.getmtime(os.path.join(p, "_SUCCESS")) != marks[k]
+        assert rewritten == (k == "impute_gap_stats"), k
+    exact_after, floats_after = gap_rows()
+    assert exact_after == exact_before
+    for a, b in zip(floats_after, floats_before):
+        assert a == pytest.approx(b, rel=1e-12)
+
 
 def test_compact_family_reduces_files_preserves_rows(spark, tmp_path):
     """compact_family rewrites a fragmented sink into few files with

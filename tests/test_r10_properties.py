@@ -1058,9 +1058,6 @@ def test_eval_pipeline_e2e_isotonic_reduces_ece(spark):
     through the fitted isotonic map cannot worsen binned ECE (isotonic
     is the least-squares monotone fit on exactly that substrate), and
     the chain's interfaces line up end-to-end."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     row = e.q_eval_pipeline_e2e(spark, "/root/testdata/sf0.001").collect()[0]

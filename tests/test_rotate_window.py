@@ -8,11 +8,13 @@ from __future__ import annotations
 import importlib.util
 import json
 import re
+from pathlib import Path
 
 
 def _load():
     spec = importlib.util.spec_from_file_location(
-        "rotate_window", "/root/repo/scripts/rotate_window.py"
+        "rotate_window",
+        Path(__file__).resolve().parents[1] / "scripts" / "rotate_window.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

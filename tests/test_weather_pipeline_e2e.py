@@ -7,11 +7,7 @@ and the broadcast-join plan shape (reference load_data.py:103-317)."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 
