@@ -4317,9 +4317,8 @@ FROM pc
 
 
 def q_streaming_stateful_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-user aggregate via Spark 4's transformWithStateInPandas
-    (named ValueState, update mode) — the successor API to
-    applyInPandasWithState. Oracle = the batch groupBy aggregate (the
+    """Running per-user aggregate via applyInPandasWithState (one state
+    tuple per key, update mode). Oracle = the batch groupBy aggregate (the
     final state after the availableNow run IS the batch total)."""
     import uuid
 

@@ -22,7 +22,13 @@ from pyspark.sql import functions as F
 from .config import INTERVALS, dataset_families
 from .operators.periods import add_rolling_avg, mark_coldest_weeks, weekly_stats
 from .sources.knmi import join_weather_data
-from .sources.parquet import family_path, join_index, read_family
+from .sources.parquet import (
+    data_files,
+    family_path,
+    is_committed,
+    join_index,
+    read_family,
+)
 
 HOUSEHOLD_TABLES = ["default", "calculated"]
 
@@ -37,18 +43,18 @@ def get_household_tables(
     metadata_columns: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Lazy household tables per interval (plus ``default``/``calculated``
-    when present), each left-joined with the (broadcast) index and optionally
-    weather (reference get_household_tables, load_data.py:23-67)."""
+    when committed), each left-joined with the (broadcast) index and
+    optionally weather (reference get_household_tables,
+    load_data.py:23-67). Families without a committed write are omitted."""
     out: dict[str, DataFrame] = {}
     names = [(t, None) for t in HOUSEHOLD_TABLES] + [
         ("household", iv) for iv in (intervals or INTERVALS)
     ]
     for name, iv in names:
         family = f"household_{name}" if iv is None else name
-        try:
-            df = read_family(spark, folder, family, iv)
-        except Exception:  # noqa: BLE001 — family not materialized
+        if not is_committed(family_path(folder, family, iv)):
             continue
+        df = read_family(spark, folder, family, iv)
         if index_df is not None:
             df = join_index(df, index_df, metadata_columns)
         if weather is not None and station_mapping is not None:
@@ -64,14 +70,13 @@ def get_project_tables(
     weather: DataFrame | None = None,
     station_mapping: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Lazy project-level tables per interval, optionally weather-joined
-    (reference get_project_tables, load_data.py:320-351)."""
+    """Lazy project-level tables per committed interval, optionally
+    weather-joined (reference get_project_tables, load_data.py:320-351)."""
     out: dict[str, DataFrame] = {}
     for iv in intervals or INTERVALS:
-        try:
-            df = read_family(spark, folder, "project", iv)
-        except Exception:  # noqa: BLE001
+        if not is_committed(family_path(folder, "project", iv)):
             continue
+        df = read_family(spark, folder, "project", iv)
         if weather is not None and station_mapping is not None:
             df = join_weather_data(df, weather, station_mapping)
         out[iv] = df
@@ -133,7 +138,7 @@ def register_sql_views(
     intervals: list[str] | None = None,
     index_df: DataFrame | None = None,
 ) -> list[str]:
-    """SQL façade over the dataset catalog: every materialized family in
+    """SQL façade over the dataset catalog: every committed family in
     ``folder`` becomes a temp view (``household_60min``, ``project_24h``,
     ``avg_diffs``, ...), so users can run plain ``spark.sql`` over the
     pipeline outputs — the capability the reference delegates to Ibis'
@@ -145,8 +150,7 @@ def register_sql_views(
     """
     registered: list[str] = []
     for name, iv in dataset_families(intervals):
-        path = family_path(folder, name, iv)
-        if not os.path.exists(path):
+        if not is_committed(family_path(folder, name, iv)):
             continue
         df = read_family(spark, folder, name, iv)
         if (
@@ -165,9 +169,10 @@ def register_sql_views(
 
 
 def catalog(spark: SparkSession, folder: str) -> DataFrame:
-    """Discovery surface for the dataset catalog: one row per materialized
-    family with its on-disk size, file count, column count, and commit
-    state — what a user (or an ops dashboard) lists before querying.
+    """Discovery surface for the dataset catalog: one row per family that
+    has data files on disk, committed or not, with its on-disk size, file
+    count, column count, and commit state — what a user (or an ops
+    dashboard) lists before querying.
     Metadata-only: directory listings plus one schema read per family,
     no data scanned.
 
@@ -177,27 +182,19 @@ def catalog(spark: SparkSession, folder: str) -> DataFrame:
     rows = []
     for name, iv in dataset_families():
         path = family_path(folder, name, iv)
-        if not os.path.exists(path):
+        files = data_files(path)
+        if not files:
             continue
-        n_files = size = 0
-        committed = False
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f == "_SUCCESS":
-                    committed = True
-                elif not f.startswith(("_", ".")):
-                    n_files += 1
-                    size += os.path.getsize(os.path.join(root, f))
         n_cols = len(read_family(spark, folder, name, iv).columns)
         rows.append(
             (
                 name,
                 iv,
                 path,
-                n_files,
-                size,
+                len(files),
+                sum(os.path.getsize(f) for f in files),
                 n_cols,
-                committed,
+                is_committed(path),
             )
         )
     return spark.createDataFrame(

@@ -72,14 +72,6 @@ def check_col(var: str) -> str:
     return f"{var}Check"
 
 
-def huis_max_col(var: str) -> str:
-    return f"{diff_col(var)}_huis_max"
-
-
-def upper_bound_col(var: str) -> str:
-    return f"{diff_col(var)}_upper_bound"
-
-
 def get_diff_columns(cumulative_columns: list[str] | None = None) -> list[str]:
     """Reference impute.py:444-467."""
     cols = cumulative_columns if cumulative_columns is not None else CUMULATIVE_COLUMNS
@@ -203,7 +195,3 @@ def dataset_families(intervals: list[str] | None = None) -> list[tuple[str, str 
     return [(name, None) for name in STAGE_FAMILIES] + [
         (name, iv) for iv in intervals or INTERVALS for name in ("household", "project")
     ]
-
-
-KEY_COLUMNS: list[str] = ["HuisIdBSV", "ProjectIdBSV"]
-READING_DATE: str = "ReadingDate"

@@ -69,10 +69,8 @@ def household_diff_max_bounds(df: DataFrame, diff_columns: list[str]) -> DataFra
     Reference impute.py:55-90. Output: one row per household with
     ``<col>_huis_max`` and ``<col>_upper_bound`` columns.
     """
-    # NOTE: config.huis_max_col/upper_bound_col take the CUMULATIVE name and
-    # append "Diff"; inputs here are already diff columns, so the suffixes
-    # are spelled directly. Exact ``percentile`` (not percentile_approx):
-    # the per-project input (house maxima) is tiny.
+    # Exact ``percentile`` (not percentile_approx): the per-project input
+    # (house maxima) is tiny.
     house_max = df.groupBy("ProjectIdBSV", "HuisIdBSV").agg(
         *[F.max(c).alias(f"{c}_huis_max") for c in diff_columns]
     )

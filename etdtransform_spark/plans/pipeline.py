@@ -35,7 +35,7 @@ from ..operators.impute import (
     imputation_summaries,
 )
 from ..operators.resample import resample
-from ..sources.parquet import family_path, read_family, write_family
+from ..sources.parquet import family_path, is_committed, read_family, write_family
 
 
 def run_pipeline(
@@ -70,7 +70,7 @@ def run_pipeline(
         never constructs its plan."""
         key = base_name if interval is None else f"{base_name}_{interval}"
         path = family_path(output_folder, base_name, interval)
-        if skip_existing and os.path.exists(os.path.join(path, "_SUCCESS")):
+        if skip_existing and is_committed(path):
             written[key] = path
         else:
             written[key] = write_family(

@@ -54,22 +54,17 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     return cols
 
 
-def read_table(
-    spark: SparkSession, path: str, pin_utc: bool = True
-) -> DataFrame:
+def read_table(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` that transparently repairs nanosecond-precision
     timestamp columns to TimestampType (microsecond truncation, identical to
     DuckDB's ns->us cast). ``ts div 1000`` is exact integer division — a
     double division would lose precision at ~1.7e18 ns epoch values.
 
-    ``pin_utc`` (default True) sets the SESSION-WIDE timezone to UTC as a
-    side effect: every contract query assumes naive-UTC semantics (what
-    DuckDB/pandas give back), and the harness session is not guaranteed to
-    have been built by get_spark(). A caller who deliberately runs a
-    non-UTC session must pass ``pin_utc=False`` — the pin mutates shared
-    session state, not just this read."""
-    if pin_utc:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    Sets the SESSION-WIDE timezone to UTC as a side effect: every contract
+    query assumes naive-UTC semantics (what DuckDB/pandas give back), and
+    the harness session is not guaranteed to have been built by
+    get_spark()."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return _read_with_nanos_repair(spark, path, path)
 
 
@@ -128,6 +123,27 @@ def family_path(base_folder: str, name: str, interval: str | None = None) -> str
     return os.path.join(base_folder, f"{fname}.parquet")
 
 
+def is_committed(path: str) -> bool:
+    """A family is committed when its root holds the ``_SUCCESS`` marker,
+    which Spark's job commit writes after every data file. A sink without
+    it is missing or half-written."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def data_files(path: str) -> list[str]:
+    """Data files under ``path``, recursively and sorted; a file path is
+    its own one data file. Names starting with ``_`` or ``.`` are skipped,
+    files and directories alike (Hadoop's hidden-file rule): ``_SUCCESS``,
+    ``_temporary/``, ``.part-*.crc``."""
+    if os.path.isfile(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(root, f) for f in files if not f.startswith(("_", "."))]
+    return sorted(out)
+
+
 def read_family(
     spark: SparkSession,
     base_folder: str,
@@ -147,6 +163,18 @@ def read_family(
     return reader.load(family_path(base_folder, name, interval))
 
 
+def _save(
+    df: DataFrame,
+    path: str,
+    format: str = "parquet",
+    partition_by: list[str] | None = None,
+) -> None:
+    writer = df.write.mode("overwrite").format(format)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
+
+
 def write_family(
     df: DataFrame,
     base_folder: str,
@@ -162,10 +190,7 @@ def write_family(
     ``.parquet`` suffix regardless: the suffix is the reference's NAMING
     convention (aggregate.py:118-121), not a format claim."""
     path = family_path(base_folder, name, interval)
-    writer = df.write.mode("overwrite").format(format)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    _save(df, path, format, partition_by)
     return path
 
 
@@ -282,6 +307,28 @@ def join_index(
     return df.join(F.broadcast(index_df), ["HuisIdBSV", "ProjectIdBSV"], "left")
 
 
+def _rewrite_compacted(
+    spark: SparkSession,
+    src: str,
+    dst: str,
+    target_mb: int,
+    partition_by: list[str] | None = None,
+    format: str = "parquet",
+) -> None:
+    """Rewrite ``src`` into ``dst`` as ceil(data bytes / ``target_mb``)
+    evenly sized files: the count comes from a driver-side listing of the
+    data files (metadata only, no data read), the rewrite is one
+    round-robin ``repartition`` (one shuffle — the price of even output)."""
+    import math
+
+    if target_mb < 1:
+        raise ValueError(f"target_mb must be >= 1, got {target_mb}")
+    total = sum(os.path.getsize(f) for f in data_files(src))
+    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    df = spark.read.format(format).load(src).repartition(n_files)
+    _save(df, dst, format, partition_by)
+
+
 def compact_family(
     spark: SparkSession,
     base_folder: str,
@@ -291,45 +338,31 @@ def compact_family(
     partition_by: list[str] | None = None,
     format: str = "parquet",
 ) -> str:
-    """Small-file compaction for a stage sink: rewrite the family into
-    files sized near ``target_file_mb``. The operational fix for the
-    classic 100 TB failure mode — thousands of tiny task outputs per
-    partition directory turning every downstream scan into metadata churn.
+    """Small-file compaction of a stage sink in place: rewrite the family
+    into evenly sized files near ``target_file_mb`` (the
+    :func:`compact_parquet` rewrite). The operational fix for the classic
+    100 TB failure mode — thousands of tiny task outputs per partition
+    directory turning every downstream scan into metadata churn.
 
-    File count derives from the CURRENT on-disk byte size (driver-side
-    listing of one directory — metadata only, no data read), then the
-    rewrite is one shuffle-free ``coalesce`` when shrinking. The swap is a
-    two-rename sequence (write tmp sibling → move old aside → move tmp in)
-    — never a half-written family visible, though a crash exactly between
-    the renames leaves the family briefly absent with both siblings intact;
+    The rewrite lands in a ``._compact_tmp`` sibling, then a two-rename
+    swap (move old aside → move tmp in) publishes it — never a
+    half-written family visible, though a crash exactly between the
+    renames leaves the family briefly absent with both siblings intact;
     stale ``_compact_tmp``/``_compact_old`` siblings from any earlier crash
-    are cleaned up on entry so retries always succeed.
+    are recovered or cleaned up on entry so retries always succeed.
     """
-    import math
     import shutil
 
     path = family_path(base_folder, name, interval)
-    tmp_stale = path + "._compact_tmp"
-    bak_stale = path + "._compact_old"
-    if not os.path.exists(path) and os.path.exists(bak_stale):
+    tmp = path + "._compact_tmp"
+    bak = path + "._compact_old"
+    if not os.path.exists(path) and os.path.exists(bak):
         # crashed between the two renames: the old data is intact in the
         # sibling — restore it before recompacting
-        os.rename(bak_stale, path)
-    shutil.rmtree(tmp_stale, ignore_errors=True)
-    shutil.rmtree(bak_stale, ignore_errors=True)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith("_"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.format(format).load(path).coalesce(n_files)
-    tmp = path + "._compact_tmp"
-    writer = df.write.mode("overwrite").format(format)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
-    bak = path + "._compact_old"
+        os.rename(bak, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(bak, ignore_errors=True)
+    _rewrite_compacted(spark, path, tmp, target_file_mb, partition_by, format)
     os.rename(path, bak)
     os.rename(tmp, path)
     shutil.rmtree(bak)
@@ -634,13 +667,12 @@ def file_stats(path: str, columns: list[str]) -> list[dict]:
     """Per-file parquet footer min/max for ``columns`` (metadata only —
     no data read). The reader half of the zone-map contract written by
     :func:`write_sorted` / :func:`write_zordered`."""
-    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     out = []
-    for frag in ds.dataset(path, format="parquet").get_fragments():
-        md = pq.ParquetFile(frag.path).metadata
-        stats: dict = {"path": frag.path, "n_rows": md.num_rows}
+    for f in data_files(path):
+        md = pq.ParquetFile(f).metadata
+        stats: dict = {"path": f, "n_rows": md.num_rows}
         for c in columns:
             mn = mx = None
             for rg in range(md.num_row_groups):
@@ -753,11 +785,8 @@ def write_family_version(
     existing = list_family_versions(base_folder, name, interval)
     new_v = (existing[-1] + 1) if existing else 1
     staging = tempfile.mkdtemp(prefix="_stage_", dir=vdir)
-    writer = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     target = os.path.join(staging, "data")
-    writer.save(target)
+    _save(df, target, partition_by=partition_by)
     final = os.path.join(vdir, f"v={new_v}")
     os.rename(target, final)
     shutil.rmtree(staging, ignore_errors=True)
@@ -900,39 +929,16 @@ def compact_parquet(
     long-lived 100 TB table needs: streaming/incremental writers leave
     thousands of KB-scale files whose per-file open/footer/task overhead
     eventually dominates scans. Rewrites the dataset into
-    ceil(total_bytes / target_mb) evenly-sized files via a round-robin
-    repartition (one full shuffle of the data being compacted — the
-    price of even output; run it per partition directory in production
-    so the unit of work is bounded).
+    ceil(total_bytes / target_mb) evenly-sized files at a NEW path via a
+    round-robin repartition (one full shuffle of the data being compacted
+    — the price of even output; run it per partition directory in
+    production so the unit of work is bounded). :func:`compact_family`
+    runs the same rewrite in place on a stage sink.
 
-    File sizing reads parquet FOOTER metadata only (pyarrow dataset
-    listing, no data scan). Returns dst_path.
-
-    Sibling: :func:`compact_family` is the FAMILY-SINK variant — same
-    problem, different trade: it compacts in place with an atomic
-    two-rename swap and a shuffle-free ``coalesce`` (cheap, but file
-    sizes inherit input skew). This one writes to a NEW path with a
-    round-robin ``repartition`` (one shuffle, evenly-sized output) —
-    pick by whether the caller owns the path lifecycle and needs even
-    files for downstream range reads.
+    File sizing lists the data files only (no data scan). Returns
+    dst_path.
     """
-    import math
-
-    import pyarrow.dataset as ds
-
-    if target_mb < 1:
-        raise ValueError(f"target_mb must be >= 1, got {target_mb}")
-    dataset = ds.dataset(src_path, format="parquet")
-    import os
-
-    total = sum(os.path.getsize(f) for f in dataset.files)
-    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    (
-        spark.read.parquet(src_path)
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(dst_path)
-    )
+    _rewrite_compacted(spark, src_path, dst_path, target_mb)
     return dst_path
 
 
@@ -940,12 +946,7 @@ def compaction_audit(spark, path: str) -> DataFrame:
     """File-count / size spread of a parquet dataset (metadata only):
     ONE row (n_files, total_bytes, min_bytes, max_bytes, avg_bytes) —
     the before/after check for :func:`compact_parquet`."""
-    import os
-
-    import pyarrow.dataset as ds
-
-    files = ds.dataset(path, format="parquet").files
-    sizes = [int(os.path.getsize(f)) for f in files]
+    sizes = [os.path.getsize(f) for f in data_files(path)]
     rows = [(
         len(sizes),
         int(sum(sizes)),

@@ -1,15 +1,11 @@
-"""Running per-key streaming aggregate with a pluggable state backend:
-Spark 4's transformWithStateInPandas when its runtime is available,
-applyInPandasWithState otherwise.
+"""Running per-key streaming aggregate on ``applyInPandasWithState``.
 
-``transformWithStateInPandas`` is the successor stateful API — named,
-typed, independently-evolvable state variables (value/list/map), TTL and
-timers — but its Python state server needs ``protobuf``, which not every
-deployment ships (this container does not). The operator contract here is
-identical under both backends: each micro-batch folds its rows into one
-fixed-width state tuple per key and emits the key's updated running
-totals (update-mode semantics), so the sink always holds the latest
-running aggregate. State scales with keys, never with the stream.
+Each micro-batch folds its rows into one fixed-width state tuple per key
+and emits the key's updated running totals (update-mode semantics), so
+the sink always holds the latest running aggregate. State scales with
+keys, never with the stream. ``applyInPandasWithState`` needs no runtime
+beyond pandas/pyarrow; Spark 4's ``transformWithStateInPandas`` would
+also need ``protobuf``.
 """
 
 from __future__ import annotations
@@ -22,8 +18,7 @@ _OUT_SCHEMA = (
 
 
 def _fold(carry, vals):
-    """Fold a batch's values into the (n, s, mn, mx) running tuple —
-    shared by both backends so their semantics cannot drift."""
+    """Fold a batch's values into the (n, s, mn, mx) running tuple."""
     n, s, mn, mx = carry
     if len(vals) == 0:
         return carry
@@ -35,83 +30,21 @@ def _fold(carry, vals):
     return n, s, mn, mx
 
 
-def transform_with_state_available() -> bool:
-    """The transformWithState Python runtime requires protobuf."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _tws_processor(value_col: str):
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningAggProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "running", "n bigint, s double, mn double, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            carry = (0, 0.0, None, None)
-            if self._state.exists():
-                carry = tuple(self._state.get())
-            for pdf in rows:
-                carry = _fold(carry, pdf[value_col].dropna())
-            self._state.update(carry)
-            n, s, mn, mx = carry
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n": [n],
-                    # the running sum is 0.0 internally, but a key that has
-                    # never seen a non-null value reports NULL (SQL sum
-                    # semantics — the batch-oracle sum of all-NULLs is NULL)
-                    "sum_value": [s if n > 0 else None],
-                    "min_value": [mn],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningAggProcessor()
-
-
 def streaming_running_agg(
     stream_df: DataFrame,
     key_col: str,
     value_col: str = "value",
-    backend: str | None = None,
 ) -> DataFrame:
     """Update-mode running aggregate per key over an unbounded stream.
 
     Output schema: (key, n, sum_value, min_value, max_value) — one row per
     key per micro-batch that touched it, carrying totals over ALL batches
-    so far. ``backend`` forces "tws" (transformWithStateInPandas) or
-    "apws" (applyInPandasWithState); default picks tws when its protobuf
-    runtime imports, else apws. Both partition state by the key across
-    the state store; a key's state is one fixed-width tuple.
+    so far. State is partitioned by the key across the state store; a
+    key's state is one fixed-width tuple.
     """
-    if backend is None:
-        backend = "tws" if transform_with_state_available() else "apws"
     grouped = stream_df.select(
         stream_df[key_col].alias("key"), stream_df[value_col].alias("_v")
     ).groupBy("key")
-    if backend == "tws":
-        return grouped.transformWithStateInPandas(
-            statefulProcessor=_tws_processor("_v"),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    if backend != "apws":
-        raise ValueError(f'unknown backend "{backend}"')
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -130,7 +63,9 @@ def streaming_running_agg(
             {
                 "key": [key[0]],
                 "n": [n],
-                # NULL sum for a never-observed key — see the tws twin
+                # the running sum is 0.0 internally, but a key that has
+                # never seen a non-null value reports NULL (SQL sum
+                # semantics — the batch-oracle sum of all-NULLs is NULL)
                 "sum_value": [s if n > 0 else None],
                 "min_value": [mn],
                 "max_value": [mx],

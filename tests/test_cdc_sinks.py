@@ -1,5 +1,5 @@
 """Unit tests for CDC partition-level upsert, the idempotent exactly-once
-foreachBatch sink, and the pluggable-backend running stateful aggregate —
+foreachBatch sink, and the running stateful aggregate —
 the crash/replay/cross-batch edges the sf oracle cannot exercise."""
 
 from __future__ import annotations
@@ -106,10 +106,7 @@ def test_streaming_running_agg_across_batches(spark, tmp_path):
     totals."""
     import uuid
 
-    from etdtransform_spark.streaming.stateful_agg import (
-        streaming_running_agg,
-        transform_with_state_available,
-    )
+    from etdtransform_spark.streaming.stateful_agg import streaming_running_agg
 
     src = str(tmp_path / "src")
     spark.createDataFrame(
@@ -157,10 +154,6 @@ def test_streaming_running_agg_across_batches(spark, tmp_path):
     assert finals[2] == (2, 6.0)
     # at least one key must have emitted twice (proves multi-batch run)
     assert any(len(v) == 2 for v in per_key.values())
-    # the fallback backend decision is environment-driven; both must give
-    # identical results, so when protobuf is absent we at least assert the
-    # chosen path ran (tws otherwise covered by the same assertions)
-    assert transform_with_state_available() in (True, False)
 
 
 def test_update_meenemen_precedence(spark):
@@ -271,6 +264,41 @@ def test_streaming_resample_drops_data_later_than_watermark(spark, tmp_path):
     assert [(r["ReadingDate"].strftime("%H:%M"), r["v"]) for r in rows] == [
         ("10:15", 3.0)
     ]
+
+
+def test_streaming_resample_5min_passes_rows_through_like_batch(spark, tmp_path):
+    """At 5min the stream is the batch pass-through: a duplicated
+    timestamp keeps both rows instead of summing them."""
+    import datetime as dt
+    import uuid
+
+    from etdtransform_spark.operators.resample import resample
+    from etdtransform_spark.streaming.resample_stream import streaming_resample
+
+    schema = "HuisIdBSV long, ProjectIdBSV long, ReadingDate timestamp, v double"
+    t0 = dt.datetime(2024, 1, 1, 10, 0)
+    df = spark.createDataFrame(
+        [(1, 1, t0, 1.0), (1, 1, t0, 2.0),
+         (1, 1, t0 + dt.timedelta(minutes=5), 4.0)],
+        schema,
+    )
+    src = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    name = f"r5_{uuid.uuid4().hex[:8]}"
+    q = (
+        streaming_resample(stream, "5min", variables={"v": "sum"})
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(map(tuple, spark.table(name).collect()))
+    want = sorted(map(tuple, resample(df, "5min", variables={"v": "sum"}).collect()))
+    assert len(want) == 3
+    assert got == want
 
 
 def test_versioned_family_publish_history_and_prune(spark, tmp_path):

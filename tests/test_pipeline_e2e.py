@@ -413,6 +413,41 @@ def test_compact_family_orc_and_crash_recovery(spark, tmp_path):
     assert not os.path.exists(path + "._compact_old")
 
 
+def test_compact_family_keeps_partitions(spark, tmp_path):
+    """compact_family(partition_by=...) keeps every partition directory
+    and the exact rows, and sizes from data files only."""
+    import os
+
+    from etdtransform_spark.sources.parquet import (
+        compact_family,
+        data_files,
+        family_path,
+        read_family,
+        write_family,
+    )
+
+    out = str(tmp_path)
+    df = spark.range(0, 3000).select(
+        (F.col("id") % 3).alias("ProjectIdBSV"), (F.col("id") * 0.5).alias("v")
+    )
+    path = write_family(
+        df.repartition(12), out, "fam_p", partition_by=["ProjectIdBSV"]
+    )
+
+    def partitions():
+        return sorted(d for d in os.listdir(path) if d.startswith("ProjectIdBSV="))
+
+    parts_before = partitions()
+    rows_before = sorted(map(tuple, read_family(spark, out, "fam_p").collect()))
+    n_before = len(data_files(path))
+    assert len(parts_before) == 3 and n_before > 3
+    compact_family(spark, out, "fam_p", partition_by=["ProjectIdBSV"])
+    assert partitions() == parts_before
+    files = data_files(family_path(out, "fam_p"))
+    assert len(files) == 3 and all(f.endswith(".parquet") for f in files)
+    assert sorted(map(tuple, read_family(spark, out, "fam_p").collect())) == rows_before
+
+
 def test_read_family_merge_schema(spark, tmp_path):
     """Two schema versions appended to one family directory read back as
     the union schema with nulls for the missing column."""
@@ -447,3 +482,35 @@ def test_catalog_lists_materialized_families(spark, pipeline_out):
     # column counts agree with a real read
     n_cols = len(spark.read.parquet(written["household_imputed"]).columns)
     assert cat["household_imputed"]["n_columns"] == n_cols
+
+
+def test_uncommitted_family_is_listed_but_not_served(spark, pipeline_out, tmp_path):
+    """A family without its _SUCCESS marker (a half-written sink) is not
+    registered as a view nor returned as a table; catalog still lists it
+    with committed=False."""
+    import os
+    import shutil
+
+    from etdtransform_spark.api import (
+        catalog,
+        get_household_tables,
+        register_sql_views,
+    )
+
+    out_dir = str(tmp_path / "copy")
+    shutil.copytree(pipeline_out[0], out_dir)
+    os.remove(os.path.join(out_dir, "household_60min.parquet", "_SUCCESS"))
+
+    views = register_sql_views(spark, out_dir, intervals=["15min", "60min"])
+    try:
+        assert "household_15min" in views and "household_60min" not in views
+        assert "project_60min" in views
+    finally:
+        for v in views:
+            spark.catalog.dropTempView(v)
+    hh = get_household_tables(spark, out_dir, intervals=["15min", "60min"])
+    assert "15min" in hh and "60min" not in hh
+    cat = {(r["family"], r["interval"]): r["committed"]
+           for r in catalog(spark, out_dir).collect()}
+    assert cat[("household", "60min")] is False
+    assert cat[("household", "15min")] is True

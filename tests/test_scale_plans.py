@@ -138,21 +138,20 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """Both sides bucketed by the join key with equal bucket counts -> the
     sort-merge join plans with ZERO Exchange (the write-once/read-many trade
     for stage sinks)."""
-    from etdtransform_spark.sources.bucketed import read_bucketed, write_bucketed
+    from etdtransform_spark.sources.parquet import write_bucketed
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     try:
-        write_bucketed(li, "t_li_b", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
+        write_bucketed(li, "t_li_b", "l_orderkey", 8)
         write_bucketed(
             orders.withColumnRenamed("o_orderkey", "l_orderkey"),
             "t_ord_b",
-            ["l_orderkey"],
+            "l_orderkey",
             8,
-            sort_cols=["l_orderkey"],
         )
-        a = read_bucketed(spark, "t_li_b")
-        b = read_bucketed(spark, "t_ord_b")
+        a = spark.table("t_li_b")
+        b = spark.table("t_ord_b")
         with_bucketing = {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.enabled": "false",
