@@ -11,12 +11,14 @@ Every ordered operation partitions by ``HuisIdBSV``: gap groups are contiguous
 runs within one household's time series, so they can never straddle a shuffle
 boundary (the reference guards house transitions by hand,
 vectorized_impute.py:390-391,489-495; ``Window.partitionBy`` makes it
-structural). All subsequent per-gap-group windows partition by
-``(HuisIdBSV, <group col>)`` — Spark's ClusteredDistribution is satisfied by
-the existing hash(HuisIdBSV) partitioning, so the whole multi-column engine
-costs ONE exchange of the fact table regardless of how many cumulative
-columns are processed. Per-(project, timestamp) averages and per-project
-bounds are separate small aggregates broadcast-joined back.
+structural). No window partitions by a gap group: each group's attributes
+come from its two bounds, back-filled by one descending and forward-filled by
+one ascending pass over the household, and the rules, the clamp and the
+cumulative re-normalization run on the ascending pass. The whole
+multi-column engine costs ONE exchange and TWO sorts of the fact table, and
+a fixed number of window operators, however many cumulative columns it
+imputes. Per-(project, timestamp) averages and per-project bounds are
+separate small aggregates joined back.
 """
 
 from __future__ import annotations
@@ -124,186 +126,184 @@ def calculate_average_diff(
 
 
 # ---------------------------------------------------------------------------
-# Stage 2: per-column gap grouping + rules (reference vectorized_impute.py)
+# Stage 2: gap grouping + rules, every column in two house passes
+# (reference vectorized_impute.py:343-748)
 # ---------------------------------------------------------------------------
 
-def _impute_one_column(
+# Exact running sums of avg diffs: an impute jump is the difference of two,
+# and a difference of double sums can move a qround(..., 10) result. Equal
+# scales keep sums and differences exact (|avg| < 1e9, house sum < 1e19).
+_AVG_EXACT, _SUM_EXACT = "decimal(27,18)", "decimal(37,18)"
+
+
+def _impute_columns(
     df: DataFrame,
-    cum_col: str,
+    cumulative_columns: list[str],
     thresholds: dict[str, dict[str, float]],
 ) -> DataFrame:
-    """Impute one cumulative column's Diff in-plan. Adds ``<Var>OldDiff``,
-    ``<Var>Diff_is_imputed`` and ``<Var>Diff_impute_type``; every other
-    column it builds is a temporary dropped before it returns."""
-    d, a = diff_col(cum_col), avg_col(cum_col)
-    it_col, ii_col = impute_type_col(cum_col), is_imputed_col(cum_col)
-    cvg, gap_len = "_cvg", "_gap_len"
+    """Impute every cumulative column's Diff in-plan. Adds ``<Var>OldDiff``,
+    ``<Var>Diff_is_imputed`` and ``<Var>Diff_impute_type`` per column, in
+    column order; every other column it builds is a temporary.
 
-    house_w = Window.partitionBy("HuisIdBSV").orderBy("ReadingDate")
-    house_all = Window.partitionBy("HuisIdBSV")
+    A gap group is a run of NA diffs, split after a row that shows a
+    cumulative value (vectorized_impute.py:388-419). Its rule needs the
+    values at the group's bounds. Two passes over each household, shared by
+    all columns, fill them in with ``last(..., ignorenulls)`` over a running
+    frame: descending, the end row's number (counted from the house's last
+    row), sum of avg diffs after it and cumulative value; ascending, the
+    start row's number, sum of avg diffs from it on and the cumulative
+    value before it. Gap length and impute jump are differences of the two
+    bounds. One pass would need a back-fill over ``rowsBetween(currentRow,
+    unboundedFollowing)``, which Spark evaluates in O(n^2) per partition.
+    Both passes assume one reading per (HuisIdBSV, ReadingDate).
+    """
+    desc = Window.partitionBy("HuisIdBSV").orderBy(F.col("ReadingDate").desc())
+    asc = Window.partitionBy("HuisIdBSV").orderBy("ReadingDate")
+    desc_run = desc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    asc_run = asc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    house = asc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    base = df.columns
+    cols = list(enumerate(cumulative_columns))
+    code = {r: F.lit(int(r)) for r in ImputeType}
 
-    is_na = F.col(d).isNull()
-    # gap_start: first NA row of a run (house boundaries handled by the
-    # window partitioning; reference vectorized_impute.py:388-392).
-    prev_is_na = F.lag(is_na).over(house_w)
-    gap_start = is_na & ~F.coalesce(prev_is_na, F.lit(False))
+    def na(c: str) -> Column:
+        return F.col(diff_col(c)).isNull()
 
-    # cumulative_value_group: gap groups split where the cumulative column has
-    # a non-NA value mid-gap (vectorized_impute.py:401-419). The group id is a
-    # running count of starts; NULL on non-gap rows.
-    cum_value_encountered = F.col(cum_col).isNotNull() & is_na
-    df = df.withColumn("_gap_start", gap_start).withColumn(
-        "_cve_prev", F.coalesce(F.lag(cum_value_encountered).over(house_w), F.lit(False))
-    )
-    group_seed = (F.col("_cve_prev") | F.col("_gap_start")).cast("long")
-    running_group = F.sum(group_seed).over(
-        house_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn(cvg, F.when(is_na, running_group))
+    def exact_avg(c: str) -> Column:
+        return F.coalesce(F.col(avg_col(c)), F.lit(0.0)).cast(_AVG_EXACT)
 
-    group_w = Window.partitionBy("HuisIdBSV", cvg)
-    group_ordered = group_w.orderBy("ReadingDate")
-    group_full = group_ordered.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    def t(name: str, i: int) -> Column:
+        return F.col(f"_{name}{i}")
 
-    df = df.withColumn(
-        gap_len, F.when(F.col(cvg).isNotNull(), F.count(F.lit(1)).over(group_w))
-    )
+    # descending pass: row number from the end, sum of avg diffs from each
+    # row to the end, and each row's neighbours in time
+    step = {"_rn": F.row_number().over(desc)}
+    for i, c in cols:
+        step[f"_sum{i}"] = F.sum(exact_avg(c)).over(desc_run).cast(_SUM_EXACT)
+        step[f"_next_na{i}"] = F.lag(na(c), 1, False).over(desc)
+        step[f"_prev_na{i}"] = F.lead(na(c), 1, False).over(desc)
+        step[f"_prev_cum{i}"] = F.lead(F.col(c)).over(desc)
+    df = df.withColumns(step)
 
-    # prev_cum_value: the cumulative value on the row just before the gap
-    # (negative -> NULL), broadcast to the whole group
-    # (vectorized_impute.py:481-505).
-    prev_raw = F.lag(F.col(cum_col)).over(house_w)
-    first_in_group = F.col(cvg).isNotNull() & (
-        F.coalesce(F.lag(F.col(cvg)).over(house_w), F.lit(-1)) != F.col(cvg)
-    )
-    prev_seed = F.when(first_in_group & (prev_raw >= 0), prev_raw)
-    df = df.withColumn("_prev_seed", prev_seed)
-    df = df.withColumn(
-        "_prev_cum",
-        F.when(
-            F.col(cvg).isNotNull(),
-            F.first(F.col("_prev_seed"), ignorenulls=True).over(group_full),
-        ),
-    )
+    # a group ends on an NA row that shows a cumulative value or is the last
+    # of its run. end_cum: negative -> NULL (vectorized_impute.py:611-614)
+    step = {}
+    for i, c in cols:
+        is_end = na(c) & (F.col(c).isNotNull() | ~t("next_na", i))
+        bound = F.struct(
+            F.col("_rn").alias("rn"),
+            (t("sum", i) - exact_avg(c)).cast(_SUM_EXACT).alias("after"),
+            F.when(F.col(c) >= 0, F.col(c)).alias("cum"),
+        )
+        step[f"_end{i}"] = F.last(F.when(is_end, bound), ignorenulls=True).over(desc_run)
+    df = df.withColumns(step)
 
-    # end_cum_value: last non-NA cumulative value inside the group
-    # (negative -> NULL) (vectorized_impute.py:611-614).
-    end_raw = F.when(
-        F.col(cvg).isNotNull(),
-        F.last(F.col(cum_col), ignorenulls=True).over(group_full),
-    )
-    df = df.withColumn("_end_cum", F.when(end_raw >= 0, end_raw))
+    # ascending pass: a group starts on an NA row after a non-NA row or after
+    # a row that shows a cumulative value. prev: that row's cumulative value,
+    # negative -> NULL (vectorized_impute.py:481-505)
+    step = {}
+    for i, c in cols:
+        d, a, prev_cum = F.col(diff_col(c)), F.col(avg_col(c)), t("prev_cum", i)
+        is_start = na(c) & (~t("prev_na", i) | prev_cum.isNotNull())
+        bound = F.struct(
+            F.col("_rn").alias("rn"),
+            t("sum", i).alias("sum"),
+            F.when(prev_cum >= 0, prev_cum).alias("prev"),
+        )
+        step[f"_start{i}"] = F.last(F.when(is_start, bound), ignorenulls=True).over(asc_run)
+        # house_impute_factor: sum(avg)/sum(diff) over rows where both are
+        # comparable; 0-denominator -> 1.0; forced to 1.0 when comparable
+        # rows <= half the house's rows (vectorized_impute.py:554-587).
+        comparable = a.isNotNull() & d.isNotNull() & (d >= 0)
+        diff_avg_sum = F.sum(F.when(comparable, a)).over(house)
+        cum_diff_sum = F.sum(F.when(comparable, d)).over(house)
+        factor_raw = F.when(
+            F.coalesce(cum_diff_sum, F.lit(0.0)) != 0.0,
+            F.coalesce(diff_avg_sum, F.lit(0.0)) / cum_diff_sum,
+        )
+        step[f"_factor{i}"] = F.when(
+            F.sum(comparable.cast("long")).over(house) <= F.count(F.lit(1)).over(house) / 2,
+            F.lit(1.0),
+        ).otherwise(F.coalesce(factor_raw, F.lit(1.0)))
+    df = df.withColumns(step)
 
-    gap_jump = F.col("_end_cum") - F.col("_prev_cum")
-    df = df.withColumn("_gap_jump", gap_jump)
+    def gap(i: int) -> tuple[Column, Column, Column, Column]:
+        """(end_cum, prev_cum, gap_jump, impute_jump) of a gap row's group;
+        the impute jump sums its zero-filled avg diffs
+        (vectorized_impute.py:535-547)."""
+        start, end = t("start", i), t("end", i)
+        return (
+            end["cum"], start["prev"], end["cum"] - start["prev"],
+            (start["sum"] - end["after"]).cast("double"),
+        )
 
-    # impute inputs: project-average diffs, zero-filled; group totals
-    # (vectorized_impute.py:535-547).
-    impute_values = F.coalesce(F.col(a), F.lit(0.0))
-    df = df.withColumn("_impute_values", impute_values)
-    df = df.withColumn(
-        "_impute_jump",
-        F.when(F.col(cvg).isNotNull(), F.sum("_impute_values").over(group_w)),
-    )
+    # the rule chain (vectorized_impute.py:630-748): one rule per gap row.
+    # POSITIVE_END_VALUE is end >= EPS, not > EPS: the sibling zero-end rule
+    # is < EPS, and a strict > would leave an end value of exactly EPS
+    # matching neither rule (the gap would silently stay unimputed).
+    step = {}
+    for i, c in cols:
+        end_cum, prev_cum, gap_jump, impute_jump = gap(i)
+        step[f"_rule{i}"] = F.when(
+            na(c),
+            F.when(
+                gap_jump.isNotNull(),
+                F.when(gap_jump < 0, code[ImputeType.NEGATIVE_GAP_JUMP])
+                .when(gap_jump < EPS, code[ImputeType.NEAR_ZERO_GAP_JUMP])
+                .when(impute_jump < EPS, code[ImputeType.LINEAR_FILL])
+                .otherwise(code[ImputeType.SCALED_FILL]),
+            )
+            .when(prev_cum.isNull() & (end_cum < EPS), code[ImputeType.ZERO_END_VALUE])
+            .when(prev_cum.isNull() & end_cum.isNotNull(), code[ImputeType.POSITIVE_END_VALUE])
+            .when(prev_cum.isNotNull(), code[ImputeType.NO_END_VALUE]),
+        )
+    df = df.withColumns(step)
 
-    # house_impute_factor: sum(avg)/sum(diff) over rows where both are
-    # comparable; 0-denominator/inf -> 1.0; forced to 1.0 when comparable rows
-    # <= half the house's rows (vectorized_impute.py:554-587).
-    comparable = F.col(a).isNotNull() & F.col(d).isNotNull() & (F.col(d) >= 0)
-    diff_avg_sum = F.sum(F.when(comparable, F.col(a))).over(house_all)
-    cum_diff_sum = F.sum(F.when(comparable, F.col(d))).over(house_all)
-    comparable_count = F.sum(comparable.cast("long")).over(house_all)
-    total_count = F.count(F.lit(1)).over(house_all)
-    factor_raw = F.when(
-        F.coalesce(cum_diff_sum, F.lit(0.0)) != 0.0,
-        F.coalesce(diff_avg_sum, F.lit(0.0)) / cum_diff_sum,
+    zero_fill = int(
+        ImputeType.NEGATIVE_GAP_JUMP | ImputeType.NEAR_ZERO_GAP_JUMP | ImputeType.ZERO_END_VALUE
     )
-    factor = F.when(
-        comparable_count <= total_count / 2, F.lit(1.0)
-    ).otherwise(F.coalesce(factor_raw, F.lit(1.0)))
-    df = df.withColumn("_house_factor", factor)
-
-    # --- the rule chain (vectorized_impute.py:630-748). Masks are disjoint;
-    # one F.when cascade per output column.
-    in_gap = F.col(cvg).isNotNull()
-    has_jump = in_gap & F.col("_gap_jump").isNotNull()
-    no_jump = in_gap & F.col("_gap_jump").isNull()
-
-    r_negative = has_jump & (F.col("_gap_jump") < 0)
-    r_near_zero = has_jump & (F.col("_gap_jump") >= 0) & (F.col("_gap_jump") < EPS)
-    r_linear = has_jump & (F.col("_gap_jump") >= EPS) & (F.col("_impute_jump") < EPS)
-    r_scaled = has_jump & (F.col("_gap_jump") >= EPS) & (F.col("_impute_jump") >= EPS)
-    r_zero_end = no_jump & F.col("_end_cum").isNotNull() & F.col("_prev_cum").isNull() & (
-        F.col("_end_cum") < EPS
-    )
-    # >= EPS, not > EPS: the sibling zero-end rule is < EPS, and a strict >
-    # would leave an end value of exactly EPS matching neither rule (the
-    # gap would silently stay unimputed).
-    r_pos_end = no_jump & F.col("_end_cum").isNotNull() & F.col("_prev_cum").isNull() & (
-        F.col("_end_cum") >= EPS
-    )
-    r_no_end = no_jump & F.col("_end_cum").isNull() & F.col("_prev_cum").isNotNull()
-
-    # pandas `round(x, 10)` is numpy half-even -> F.bround, not F.round.
-    linear_value = qround(F.col("_gap_jump") / F.col(gap_len), 10)
-    scaled_value = qround(
-        F.col("_impute_values") * (F.col("_gap_jump") / F.col("_impute_jump")), 10
-    )
-
-    imputed_value = (
-        F.when(r_negative | r_near_zero | r_zero_end, F.lit(0.0))
-        .when(r_linear, linear_value)
-        .when(r_scaled, scaled_value)
-        .when(r_pos_end, F.col("_impute_values"))
-        .when(r_no_end, F.col("_impute_values") * F.col("_house_factor"))
-    )
-    rule_type = (
-        F.when(r_negative, F.lit(int(ImputeType.NEGATIVE_GAP_JUMP)))
-        .when(r_near_zero, F.lit(int(ImputeType.NEAR_ZERO_GAP_JUMP)))
-        .when(r_linear, F.lit(int(ImputeType.LINEAR_FILL)))
-        .when(r_scaled, F.lit(int(ImputeType.SCALED_FILL)))
-        .when(r_zero_end, F.lit(int(ImputeType.ZERO_END_VALUE)))
-        .when(r_pos_end, F.lit(int(ImputeType.POSITIVE_END_VALUE)))
-        .when(r_no_end, F.lit(int(ImputeType.NO_END_VALUE)))
-        .cast("long")
-    )
-    imputed_flag = imputed_value.isNotNull()
-
-    df = (
-        df.withColumn(old_diff_col(cum_col), F.col(d))
-        .withColumn("_new_diff", F.coalesce(imputed_value, F.col(d)))
-        .withColumn(ii_col, imputed_flag)
-        .withColumn(it_col, rule_type)
-    )
+    step = {}
+    for i, c in cols:
+        rule, (_end, _prev, gap_jump, impute_jump) = t("rule", i), gap(i)
+        gap_len = t("start", i)["rn"] - t("end", i)["rn"] + 1
+        impute_values = F.coalesce(F.col(avg_col(c)), F.lit(0.0))
+        # pandas `round(x, 10)`: qround, the cross-engine twin
+        imputed_value = (
+            F.when(rule.bitwiseAND(zero_fill) != 0, F.lit(0.0))
+            .when(rule == code[ImputeType.LINEAR_FILL], qround(gap_jump / gap_len, 10))
+            .when(
+                rule == code[ImputeType.SCALED_FILL],
+                qround(impute_values * (gap_jump / impute_jump), 10),
+            )
+            .when(rule == code[ImputeType.POSITIVE_END_VALUE], impute_values)
+            .when(rule == code[ImputeType.NO_END_VALUE], impute_values * t("factor", i))
+        )
+        step[f"_new{i}"] = F.coalesce(imputed_value, F.col(diff_col(c)))
+    df = df.withColumns(step)
 
     # threshold clamp (vectorized_impute.py:58-109): out-of-bounds values are
     # replaced with the project average and THRESHOLD_ADJUSTED is OR-ed in.
-    th = thresholds.get(d)
-    if th is not None:
-        out_of_bounds = F.col("_new_diff").isNotNull() & (
-            (F.col("_new_diff") < F.lit(th["Min"])) | (F.col("_new_diff") > F.lit(th["Max"]))
-        )
-        df = (
-            df.withColumn(
-                it_col,
-                F.when(
-                    out_of_bounds,
-                    F.coalesce(F.col(it_col), F.lit(0)).bitwiseOR(
-                        F.lit(int(ImputeType.THRESHOLD_ADJUSTED))
-                    ),
-                ).otherwise(F.col(it_col)),
-            )
-            .withColumn(ii_col, F.when(out_of_bounds, F.lit(True)).otherwise(F.col(ii_col)))
-            .withColumn("_new_diff", F.when(out_of_bounds, F.col(a)).otherwise(F.col("_new_diff")))
-        )
-
-    df = df.withColumn(d, F.col("_new_diff"))
-    return df.drop(
-        "_gap_start", "_cve_prev", cvg, gap_len, "_prev_seed", "_prev_cum",
-        "_end_cum", "_gap_jump", "_impute_values", "_impute_jump",
-        "_house_factor", "_new_diff",
+    replaced: dict[str, Column] = {}
+    added: dict[str, Column] = {}
+    for i, c in cols:
+        d = diff_col(c)
+        new, rule = t("new", i), t("rule", i)
+        replaced[d], is_imputed, rule_type = new, rule.isNotNull(), rule.cast("long")
+        th = thresholds.get(d)
+        if th is not None:
+            out_of_bounds = new.isNotNull() & ((new < F.lit(th["Min"])) | (new > F.lit(th["Max"])))
+            replaced[d] = F.when(out_of_bounds, F.col(avg_col(c))).otherwise(new)
+            rule_type = F.when(
+                out_of_bounds,
+                F.coalesce(rule_type, F.lit(0)).bitwiseOR(code[ImputeType.THRESHOLD_ADJUSTED]),
+            ).otherwise(rule_type)
+            is_imputed = F.when(out_of_bounds, F.lit(True)).otherwise(is_imputed)
+        added[old_diff_col(c)] = F.col(d)
+        added[is_imputed_col(c)] = is_imputed
+        added[impute_type_col(c)] = rule_type
+    return df.select(
+        *[replaced.get(name, F.col(name)).alias(name) for name in base],
+        *[e.alias(name) for name, e in added.items()],
     )
 
 
@@ -323,21 +323,18 @@ def impute_and_normalize(
     also rebuilt from their raw diffs (verified value-for-value by
     tests/test_reference_parity.py).
 
-    Returns the imputed frame: one lazy plan with a single exchange (see
-    module docstring). Its gap statistics are ``imputation_gap_stats`` over
-    this frame. Reference orchestration: vectorized_impute.py:112-273 +
-    aggregate.py:199-211.
+    Returns the imputed frame: one lazy plan with one exchange and two
+    sorts (see module docstring). Its gap statistics are
+    ``imputation_gap_stats`` over this frame. Reference orchestration:
+    vectorized_impute.py:112-273 + aggregate.py:199-211.
     """
     if cumulative_columns is None:
         cumulative_columns = [c for c in IMPUTE_CUMULATIVE_COLUMNS if c in df.columns]
     if thresholds is None:
         thresholds = THRESHOLDS
     normalize_columns = list(cumulative_columns) + [
-        c
-        for c in CUMULATIVE_COLUMNS
-        if c not in cumulative_columns
-        and c in df.columns
-        and diff_col(c) in df.columns
+        c for c in CUMULATIVE_COLUMNS
+        if c not in cumulative_columns and c in df.columns and diff_col(c) in df.columns
     ]
     diff_columns = get_diff_columns(cumulative_columns)
 
@@ -347,8 +344,7 @@ def impute_and_normalize(
     # table. Broadcast at test scale; at 100 TB AQE picks sort-merge.
     df = df.join(avg_diffs, ["ProjectIdBSV", "ReadingDate"], "left")
 
-    for cum_col in cumulative_columns:
-        df = _impute_one_column(df, cum_col, thresholds)
+    df = _impute_columns(df, cumulative_columns, thresholds)
 
     # normalization (reference aggregate.py:199-211): Original := cumulative;
     # cumulative := cumsum(imputed Diff); Check := diff(new - original).

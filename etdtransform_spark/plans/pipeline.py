@@ -49,10 +49,9 @@ def run_pipeline(
     """Run the full chain from a combined household DataFrame; returns the
     map of family name -> written path.
 
-    Every family is written, then read back for the stages after it, so
-    each stage reads its inputs from disk: gap stats and the imputation
-    summaries read the written ``household_imputed`` family, and the impute
-    plan runs once.
+    Every family is written, and each one a later stage reads is read back
+    from disk: gap stats and the imputation summaries read the written
+    ``household_imputed`` family, and the impute plan runs once.
 
     ``skip_existing`` is the distributed twin of the reference's
     ``sorted=``/``diffs_calculated=`` skip flags (impute.py:587-637) made
@@ -65,9 +64,10 @@ def run_pipeline(
     os.makedirs(output_folder, exist_ok=True)
     written: dict[str, str] = {}
 
-    def materialize(base_name, build, interval=None, partition_by=None):
+    def materialize(base_name, build, interval=None, partition_by=None, read_back=True):
         """Write-or-skip one family; ``build`` is lazy so a skipped stage
-        never constructs its plan."""
+        never constructs its plan. A family no later stage reads is not
+        read back (each read costs a listing and a schema job)."""
         key = base_name if interval is None else f"{base_name}_{interval}"
         path = family_path(output_folder, base_name, interval)
         if skip_existing and is_committed(path):
@@ -77,7 +77,9 @@ def run_pipeline(
                 build(), output_folder, base_name,
                 interval=interval, partition_by=partition_by,
             )
-        return read_family(spark, output_folder, base_name, interval=interval)
+        if read_back:
+            return read_family(spark, output_folder, base_name, interval=interval)
+        return None
 
     cum_cols = cumulative_columns or [
         c for c in IMPUTE_CUMULATIVE_COLUMNS if c in household_df.columns
@@ -118,10 +120,12 @@ def run_pipeline(
     materialize(
         "impute_summary_household",
         lambda: imputation_summaries(gap_stats, imputed)[0],
+        read_back=False,
     )
     materialize(
         "impute_summary_project",
         lambda: imputation_summaries(gap_stats, imputed)[1],
+        read_back=False,
     )
 
     # stage: project-mean of diffs (aggregate.py:190-194)
@@ -130,6 +134,7 @@ def run_pipeline(
         lambda: imputed.groupBy("ProjectIdBSV", "ReadingDate").agg(
             *[F.avg(c).alias(c) for c in all_diff_cols]
         ),
+        read_back=False,
     )
 
     # stage: calculated columns (calculated_columns.py:9-139)
@@ -147,5 +152,6 @@ def run_pipeline(
         materialize(
             "project",
             lambda hh_iv=hh_iv: aggregate_project_data(hh_iv), interval=iv,
+            read_back=False,
         )
     return written

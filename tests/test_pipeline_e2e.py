@@ -39,32 +39,56 @@ def _series(house):
     return rows
 
 
-@pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
-    out_dir = str(tmp_path_factory.mktemp("etd_out"))
-    rows = []
-    for h in HOUSES:
-        rows += _series(h)
+def _household_frame(spark, n_steps=N_STEPS):
+    """The first ``n_steps`` readings of every house as one DataFrame."""
+    cols = ["HuisIdBSV", "ProjectIdBSV", "ReadingDate"] + [
+        x for c in CUM_COLS for x in (c, f"{c}Diff")
+    ]
     schema = (
         "HuisIdBSV long, ProjectIdBSV long, ReadingDate timestamp, "
         + ", ".join(f"`{c}` double, `{c}Diff` double" for c in CUM_COLS)
     )
-    df = spark.createDataFrame(
-        [
-            tuple(
-                r[k]
-                for k in ["HuisIdBSV", "ProjectIdBSV", "ReadingDate"]
-                + [x for c in CUM_COLS for x in (c, f"{c}Diff")]
-            )
-            for r in rows
-        ],
-        schema,
-    )
+    rows = [r for h in HOUSES for r in _series(h)[:n_steps]]
+    return spark.createDataFrame([tuple(r[k] for k in cols) for r in rows], schema)
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, tmp_path_factory):
+    out_dir = str(tmp_path_factory.mktemp("etd_out"))
     written = run_pipeline(
-        spark, df, out_dir, cumulative_columns=CUM_COLS,
+        spark, _household_frame(spark), out_dir, cumulative_columns=CUM_COLS,
         intervals=["15min", "60min", "24h"],
     )
     return out_dir, written
+
+
+def test_pipeline_reads_back_only_families_a_later_stage_reads(
+    spark, tmp_path, monkeypatch
+):
+    """A 5-interval run writes all 19 families but reads back only the 11
+    a later stage reads: the summaries, the aggregated diffs and the
+    project families are written and left on disk."""
+    import etdtransform_spark.plans.pipeline as pipeline_mod
+    from etdtransform_spark.config import dataset_families
+    from etdtransform_spark.sources.parquet import family_path
+
+    reads = []
+    read = pipeline_mod.read_family
+
+    def counting_read(*args, **kw):
+        reads.append(args[2:])
+        return read(*args, **kw)
+
+    monkeypatch.setattr(pipeline_mod, "read_family", counting_read)
+    out = str(tmp_path)
+    written = run_pipeline(
+        spark, _household_frame(spark, 288), out, cumulative_columns=CUM_COLS
+    )
+    assert len(reads) == 11, reads
+    assert written == {
+        name if iv is None else f"{name}_{iv}": family_path(out, name, iv)
+        for name, iv in dataset_families()
+    }
 
 
 def test_all_families_written(pipeline_out):
